@@ -90,4 +90,41 @@ class StoreJobCountSpec extends SparkTestBase {
       "regression re-introduced the eager delta checkpoints or the " +
       "bucket collects")
   }
+  test("versioned-store applyChangesVersioned runs as a bounded handful " +
+    "of jobs (one manifest read, the bucket probe, the election write " +
+    "and the manifest append)") {
+    val base = tmp("jobcount-versioned")
+    val store = (1L to 500L).map(k => (k, s"v$k", 1L)).toDF("k", "payload", "seq")
+    VersionedStoreOps.writeVersioned(store, spark, base, "k", "seq", 8)
+    val changes = (1L to 50L).map(k => (k * 7, s"w$k", 2L, "U"))
+      .toDF("k", "payload", "seq", "op")
+    val jobs = countJobs {
+      VersionedStoreOps.applyChangesVersioned(changes, spark, base, "k",
+        "seq", "op", 8)
+    }
+    assert(jobs <= 9, s"applyChangesVersioned ran $jobs jobs — manifest " +
+      "read, bucket probe, election write and manifest append; a " +
+      "regression re-read the manifest or added a pass over the batch")
+  }
+
+  test("vector-store delete (the cell rewrite path) runs as a bounded " +
+    "handful of jobs (manifest read, touched-cell probe, cell rewrite " +
+    "and the manifest swap)") {
+    val base = tmp("jobcount-vecdel")
+    val corpus = (1L to 400L).map(k =>
+      (k, Array.tabulate(8)(i => ((k * 31 + i * 17) % 23).toFloat - 11f)))
+      .toDF("vec_id", "embedding")
+    val cents = corpus.orderBy("vec_id").limit(4)
+      .select(col("vec_id").as("cid"),
+        col("embedding").cast("array<double>").as("cvec"))
+    VectorStoreOps.writeVectorStore(corpus, spark, base, cents)
+    val doomed = (1L to 400L by 9).toDF("vec_id")
+    val jobs = countJobs {
+      VectorStoreOps.deleteFromVectorStore(doomed, spark, base)
+    }
+    assert(jobs <= 14, s"deleteFromVectorStore ran $jobs jobs — manifest " +
+      "read, touched-cell probe, cell rewrite and manifest swap; a " +
+      "regression re-read the manifest or re-listed the rewritten cells " +
+      "through a Spark job")
+  }
 }
