@@ -255,17 +255,22 @@ object FindBlockStart {
   * forward until the eager checker accepts a record start
   * (reference: check/.../FindRecordStart.scala:30-63). */
 object FindRecordStart {
+  /** Uncompressed bytes scanned for a record start before a split gives
+    * up (2 MiB) — the one default the scan reader, split planning and
+    * the split-timing harness share, so they resolve identical splits. */
+  val MaxReadSize: Int = 1 << 21
+
   def apply(blocks: BlockReader, checker: Checker, blockStart: Long,
             maxReadSize: Int): Option[Pos] =
     apply(blocks, checker.eager _, blockStart, maxReadSize)
 
   def apply(blocks: BlockReader, checker: Checker, blockStart: Long): Option[Pos] =
-    apply(blocks, checker.eager _, blockStart, 1 << 20)
+    apply(blocks, checker.eager _, blockStart, MaxReadSize)
 
   /** Pluggable-predicate form: the split-timing harness races the eager
     * and relaxed checkers through the same scan (§2.11 compute-splits). */
   def apply(blocks: BlockReader, accept: Pos => Boolean, blockStart: Long,
-            maxReadSize: Int = 1 << 20): Option[Pos] = {
+            maxReadSize: Int = MaxReadSize): Option[Pos] = {
     var scanned = 0
     var block = blockStart
     while (scanned < maxReadSize) {

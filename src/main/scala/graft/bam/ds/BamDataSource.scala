@@ -21,7 +21,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * 100 TB on a 1000-executor cluster.
   *
   * Options: `splitSize` (bytes, default 8 MiB), `blocksToCheck`,
-  * `readsToCheck`, `maxReadSize` (checker knobs, reference defaults).
+  * `readsToCheck`, `maxReadSize` (checker knobs, reference defaults;
+  * `maxReadSize` defaults to [[graft.bam.check.FindRecordStart.MaxReadSize]]).
   */
 class BamDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "bam"
@@ -41,10 +42,14 @@ class BamDataSource extends TableProvider with DataSourceRegister {
 object BamDataSource {
   /** Hadoop conf of the active session (driver side), so fs.defaultFS /
     * credentials apply; bare default only when no session exists (tests
-    * constructing readers directly). */
-  def hadoopConf(): org.apache.hadoop.conf.Configuration =
-    try org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    catch { case _: Throwable => new org.apache.hadoop.conf.Configuration() }
+    * constructing readers directly). Looked up without catching: the
+    * session-less case is the only one that falls back. */
+  def hadoopConf(): org.apache.hadoop.conf.Configuration = {
+    import org.apache.spark.sql.SparkSession
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+  }
 
   /** Driver conf wrapped for shipping into executor closures — build it
     * DRIVER-SIDE (before mapPartitions / in the scan factory) so executors
@@ -351,9 +356,13 @@ class BamScan(paths: Seq[String], required: StructType,
           throw new IllegalStateException(
             s"$p: missing BGZF EOF marker — file is truncated or still being written")
       }
+      // filesystems without block locations plan with no host hints
       val locality = new Locality(
         try fs.getFileBlockLocations(status, 0, status.getLen)
-        catch { case _: Throwable => Array.empty[org.apache.hadoop.fs.BlockLocation] })
+        catch {
+          case _: java.io.IOException | _: UnsupportedOperationException =>
+            Array.empty[org.apache.hadoop.fs.BlockLocation]
+        })
       def hostsFor(s: Long, e: Long): Array[String] = locality.hostsFor(s, e)
 
       // index pruning: engine `.gri` side-car first, standard `.bai` else
@@ -377,7 +386,8 @@ class BamScan(paths: Seq[String], required: StructType,
     new BamPartitionReaderFactory(required,
       options.getOrElse("blockstocheck", "5").toInt,
       options.getOrElse("readstocheck", "10").toInt,
-      options.getOrElse("maxreadsize", (1 << 21).toString).toInt,
+      options.getOrElse("maxreadsize",
+        graft.bam.check.FindRecordStart.MaxReadSize.toString).toInt,
       options.getOrElse("checker", "eager"),
       filters = filters,
       flagBits = options.getOrElse("flagbits", ""))
@@ -398,11 +408,10 @@ object BamScan {
     * time — see BamScanBuilder.pushFilters. */
   def contigToIdx(paths: Seq[String]): Map[String, Int] =
     paths.headOption.map { p =>
-      val key = try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val st = hp.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(hp)
-        (p, st.getModificationTime, st.getLen)
-      } catch { case _: Throwable => (p, 0L, 0L) }
+      // an unreadable path fails here, as the header read below would
+      val hp = new org.apache.hadoop.fs.Path(p)
+      val st = hp.getFileSystem(BamDataSource.hadoopConf()).getFileStatus(hp)
+      val key = (p, st.getModificationTime, st.getLen)
       dictCache.computeIfAbsent(key, { _ =>
         val blocks = new graft.bam.io.BlockReader(graft.bam.io.SeekableInput.open(p))
         try {

@@ -35,7 +35,7 @@ object SplitTiming {
     * profile pluggable. Returns distinct split-start positions. */
   def computeSplits(path: String, splitSize: Long, relaxed: Boolean,
                     blocksToCheck: Int = 5, readsToCheck: Int = 10,
-                    maxReadSize: Int = 1 << 20,
+                    maxReadSize: Int = FindRecordStart.MaxReadSize,
                     conf: org.apache.hadoop.conf.Configuration =
                       new org.apache.hadoop.conf.Configuration()): Vector[Pos] = {
     val blocks = new BlockReader(SeekableInput.open(path, conf))

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *
   * == Durability (the store-family manifest commit) ==
   *
-  * Data lives under `base/v=N/__bucket=B/`; a versioned `_manifest`
-  * ([[graft.util.ManifestIO]], the seam shared with the vector and
-  * join-view stores) names each version's buckets, and readers resolve
+  * Data lives under `base/v=N/__bucket=B/`; the manifest
+  * ([[graft.util.ManifestIO]], the commit core shared by every
+  * manifest-committed store) names each version's buckets, and readers resolve
   * every bucket to its LATEST version. A merge writes `v=N` FIRST and
   * publishes it with one manifest append — the commit point — so:
   *
@@ -65,63 +65,27 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalAggOps {
 
+  import graft.util.ManifestIO
+  import ManifestIO.Entry
+
   private val BUCKET = "__bucket"
 
-  private def manifestPath(base: String) = s"$base/_manifest"
-
-  /** (version, bucket, empty, tag); `bucket = -1` rows are pure replay
-    * markers (an all-empty tagged merge still records its tag). */
-  private def manifestRows(spark: SparkSession,
-                           base: String): Array[(Long, Int, Boolean, Option[String])] =
-    graft.util.ManifestIO.read(spark, manifestPath(base))
-      .select("v", "bucket", "empty", "tag")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2),
-        if (r.isNullAt(3)) None else Some(r.getString(3))))
-
-  private def rowsDf(spark: SparkSession,
-                     rows: Seq[(Long, Int, Boolean, Option[String])]) = {
-    import spark.implicits._
-    rows.map { case (v, b, e, t) => (v, b, e, t.orNull) }
-      .toDF("v", "bucket", "empty", "tag")
-  }
-
-  /** Latest version per bucket AT OR BELOW `asOf`, tombstones excluded
-    * — the dirs a reader pinned to version `asOf` resolves. */
-  private def dirsAt(rows: Array[(Long, Int, Boolean, Option[String])],
-                     base: String, asOf: Long): Seq[String] =
-    rows.filter(r => r._2 >= 0 && r._1 <= asOf)
-      .groupBy(_._2).toSeq
-      .map { case (bk, hist) => (bk, hist.maxBy(_._1)) }
-      .collect { case (bk, (v, _, empty, _)) if !empty =>
-        s"$base/v=$v/$BUCKET=$bk" }
-
-  /** Latest version per bucket, tombstones excluded — the live dirs. */
-  private def liveDirs(rows: Array[(Long, Int, Boolean, Option[String])],
-                       base: String): Seq[String] =
-    dirsAt(rows, base, Long.MaxValue)
+  /** `base/v=N/__bucket=B/`, committed through [[ManifestIO]]; a
+    * marker entry (part -1) records an all-empty tagged merge. */
+  private def layout(base: String) = ManifestIO.Layout(base, "v", BUCKET)
 
   /** The store's live data directories — the read path the MV rewrite
     * rule resolves per matched aggregate (the versioned analog of the
     * flat listing it replaced). */
-  def liveStorePaths(spark: SparkSession, basePath: String): Seq[String] =
-    liveDirs(manifestRows(spark, basePath), basePath)
-
-  /** Buckets a just-written version dir materialized — one filesystem
-    * listing, the [[VersionedStoreOps]] convention. */
-  private def writtenBuckets(spark: SparkSession, dir: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith(s"$BUCKET=") =>
-        st.getPath.getName.stripPrefix(s"$BUCKET=").toInt
-    }.toSet
+  def liveStorePaths(spark: SparkSession, basePath: String): Seq[String] = {
+    val l = layout(basePath)
+    ManifestIO.resolve(ManifestIO.entries(spark, l)).map(l.dir)
   }
 
   /** Reclaim superseded bucket versions: every `v=N/__bucket=B` dir no
-    * retained resolution points at is deleted (dirs numbered past the
-    * manifest's max are an in-flight writer's slot and are skipped, as
-    * in the sibling stores). `retainVersions` is the TIME-TRAVEL floor:
+    * retained resolution points at is deleted ([[ManifestIO.sweep]]:
+    * dirs numbered past the manifest's max are an in-flight writer's
+    * slot and are skipped). `retainVersions` is the TIME-TRAVEL floor:
     * every [[readAggStoreAt]] of a version within the last
     * `retainVersions` merges stays resolvable — a (v, bucket) dir
     * survives iff it is some such read's resolution (v above the
@@ -130,45 +94,11 @@ object IncrementalAggOps {
     * the replay tags, which must outlive the data they guard. */
   def vacuumAggStore(spark: SparkSession, basePath: String,
                      retainVersions: Int = 0): Unit = {
-    val rows = manifestRows(spark, basePath)
-    val maxCommitted = (rows.map(_._1) :+ -1L).max
-    val horizon = maxCommitted - math.max(0, retainVersions)
-    // the (version, bucket) pairs a reader at version >= horizon can
-    // still resolve to: everything above the horizon, plus each
-    // bucket's latest at it. (.toSeq first: mapping the groupBy Map
-    // directly would collapse buckets sharing a max version)
-    val live = rows.filter(_._2 >= 0)
-      .groupBy(_._2).toSeq
-      .flatMap { case (bk, hist) =>
-        val vs = hist.map(_._1)
-        val atHorizon = vs.filter(_ <= horizon) match {
-          case s if s.isEmpty => Nil
-          case s => Seq((s.max, bk))
-        }
-        atHorizon ++ vs.filter(_ > horizon).map((_, bk))
-      }.toSet
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(basePath)
-    if (fs.exists(root)) {
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-        .filter(_.getPath.getName.stripPrefix("v=").toLong <= maxCommitted)
-        .foreach { vDir =>
-          val v = vDir.getPath.getName.stripPrefix("v=").toLong
-          fs.listStatus(vDir.getPath)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith(s"$BUCKET="))
-            .foreach { bDir =>
-              val bk = bDir.getPath.getName.stripPrefix(s"$BUCKET=").toInt
-              if (!live((v, bk))) fs.delete(bDir.getPath, true)
-            }
-          if (!fs.listStatus(vDir.getPath).exists(st =>
-              st.isDirectory && st.getPath.getName.startsWith(s"$BUCKET=")))
-            fs.delete(vDir.getPath, true)
-        }
-    }
-    spark.catalog.refreshByPath(basePath)
+    val l = layout(basePath)
+    val manifest = ManifestIO.entries(spark, l)
+    val horizon = ManifestIO.maxCommit(manifest) - math.max(0, retainVersions)
+    ManifestIO.sweep(spark, l, Seq(""), manifest,
+      ManifestIO.retainedFrom(manifest, horizon))
   }
 
   /** Per-measure merge function. Any COMMUTATIVE MONOID whose partial
@@ -209,15 +139,14 @@ object IncrementalAggOps {
     // version dirs orphaned beyond the fresh manifest's horizon (where
     // vacuum treats them as an in-flight slot) — like the versioned doc
     // store, re-init must be an explicit delete-then-write
-    require(!graft.util.ManifestIO.exists(spark, manifestPath(basePath)),
+    val l = layout(basePath)
+    require(!ManifestIO.exists(spark, l.manifest),
       s"aggregate store already exists at $basePath (manifest present) — " +
         "delete the base dir first to re-initialize, or merge into it")
     bucketed(df, keys, measures, nBuckets, kinds)
-      .write.mode("overwrite").partitionBy(BUCKET).parquet(s"$basePath/v=0")
-    val written = writtenBuckets(spark, s"$basePath/v=0")
-    graft.util.ManifestIO.swap(spark, manifestPath(basePath),
-      rowsDf(spark, written.toSeq.map(bk => (0L, bk, false, None))))
-    spark.catalog.refreshByPath(basePath)
+      .write.mode("overwrite").partitionBy(BUCKET).parquet(l.commitDir("", 0))
+    ManifestIO.commit(spark, l,
+      ManifestIO.writtenParts(spark, l, "", 0).map(Entry("", 0, _)), append = false)
   }
 
   /** Fold a new batch in. Only the delta's buckets are read (manifest-
@@ -234,11 +163,12 @@ object IncrementalAggOps {
                         kinds: Seq[String] = Nil,
                         batchTag: Option[String] = None): Unit = {
     require(kinds.isEmpty || kinds.length == measures.length)
-    val manifest = manifestRows(spark, basePath) // the op's ONLY manifest read
-    if (batchTag.exists(t => manifest.exists(_._4.contains(t)))) return
-    // `:+ -1L`: a store seeded from an EMPTY frame has a committed but
-    // row-less manifest, and a bare .max would throw on the first merge
-    val next = (manifest.map(_._1) :+ -1L).max + 1
+    val l = layout(basePath)
+    val manifest = ManifestIO.entries(spark, l) // the op's ONLY manifest read
+    if (batchTag.exists(t => manifest.exists(_.tag.contains(t)))) return
+    // a store seeded from an EMPTY frame has a committed but row-less
+    // manifest: its first merge takes slot 0 + 1 all the same
+    val next = ManifestIO.nextCommit(manifest)
     // the RAW delta rides straight into the fold below: pre-aggregating
     // it first was a whole extra exchange (delta → hash-agg on keys →
     // checkpoint → union → hash-agg on keys+bucket) whose reduction the
@@ -254,16 +184,12 @@ object IncrementalAggOps {
       .collect().map(_.getInt(0)) // bounded by nBuckets, never data-sized
     if (touched.isEmpty) {
       // an all-empty tagged batch still records its replay marker
-      batchTag.foreach(t => graft.util.ManifestIO.append(spark,
-        manifestPath(basePath), rowsDf(spark, Seq((next, -1, true, Some(t))))))
+      batchTag.foreach(t => ManifestIO.commit(spark, l,
+        Seq(Entry("", next, -1, tag = Some(t))), append = true))
       return
     }
-    val touchedDirs = manifest
-      .filter(r => r._2 >= 0 && touched.contains(r._2))
-      .groupBy(_._2).toSeq
-      .map { case (bk, hist) => (bk, hist.maxBy(_._1)) }
-      .collect { case (bk, (v, _, empty, _)) if !empty =>
-        s"$basePath/v=$v/$BUCKET=$bk" }
+    val touchedDirs = ManifestIO.resolve(manifest)
+      .filter(e => touched.contains(e.part.toInt)).map(l.dir)
     // leaf-dir reads carry no partition columns; the bucket is a pure
     // function of the keys, so recompute it (same value as the dir name)
     val dCols = (keys ++ measures :+ BUCKET).map(col)
@@ -287,15 +213,14 @@ object IncrementalAggOps {
       // never publishes — silently dropped and later vacuumed
       .filter(col(BUCKET).isin(touched.toIndexedSeq: _*))
       .write.mode("overwrite") // a torn prior attempt at this id is replaced
-      .partitionBy(BUCKET).parquet(s"$basePath/v=$next")
-    val written = writtenBuckets(spark, s"$basePath/v=$next")
+      .partitionBy(BUCKET).parquet(l.commitDir("", next))
+    val written = ManifestIO.writtenParts(spark, l, "", next).toSet
     // tombstone any touched bucket the fold left empty (cannot happen
     // for sum/min/max folds — zero rows persist — but resolution must
     // never fall back to a superseded copy if it ever did)
-    graft.util.ManifestIO.append(spark, manifestPath(basePath),
-      rowsDf(spark, touched.toIndexedSeq.map(bk =>
-        (next, bk, !written(bk), batchTag))))
-    spark.catalog.refreshByPath(basePath)
+    ManifestIO.commit(spark, l, touched.toIndexedSeq.map(bk =>
+      Entry("", next, bk, empty = !written(bk.toLong), tag = batchTag)),
+      append = true)
   }
 
   /** Retract a previously-merged batch — the payoff of restricting
@@ -354,7 +279,7 @@ object IncrementalAggOps {
   /** Highest committed version (the seed is 0, each merge — including
     * an all-empty tagged one — takes the next slot). */
   def maxCommittedVersion(spark: SparkSession, basePath: String): Long =
-    (manifestRows(spark, basePath).map(_._1) :+ -1L).max
+    ManifestIO.maxCommit(ManifestIO.entries(spark, layout(basePath)))
 
   /** TIME TRAVEL: the rollup exactly as of merge `v` — each bucket at
     * its latest version ≤ v, the payoff the copy-on-write layout
@@ -362,33 +287,20 @@ object IncrementalAggOps {
     * [[vacuumAggStore]]). Rollback/audit of a bad fold: read the store
     * at the version before it. Fails loudly (not wrongly) when `v`
     * predates the vacuum retention — resolution is manifest-driven, so
-    * a reclaimed dir is detected, never silently substituted. */
+    * a reclaimed dir is detected ([[ManifestIO.requireRetained]]),
+    * never silently substituted. */
   def readAggStoreAt(spark: SparkSession, basePath: String,
                      v: Long): DataFrame = {
-    val rows = manifestRows(spark, basePath)
-    val maxC = (rows.map(_._1) :+ -1L).max
+    val l = layout(basePath)
+    val manifest = ManifestIO.entries(spark, l)
+    val maxC = ManifestIO.maxCommit(manifest)
     require(v >= 0 && v <= maxC,
       s"version $v out of range: store at $basePath has versions 0..$maxC")
-    val dirs = dirsAt(rows, basePath, v)
+    val dirs = ManifestIO.resolve(manifest, v)
     require(dirs.nonEmpty,
       s"aggregate store at $basePath has no data at version $v")
-    requireUnvacuumed(spark, basePath, v, dirs)
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Loud reader-vs-vacuum boundary: every dir a version resolution
-    * points at must still exist, or the read predates the vacuum
-    * retention — detected, never silently substituted (shared by
-    * [[readAggStoreAt]] and both sides of [[diffAggStore]]). */
-  private def requireUnvacuumed(spark: SparkSession, basePath: String,
-                                v: Long, dirs: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dirs.foreach { d =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(d)),
-        s"version $v predates the vacuum retention: $d was reclaimed " +
-          "(re-vacuum with a retention floor to keep older reads alive)")
-    }
+    ManifestIO.requireRetained(spark, l, v, dirs)
+    spark.read.parquet(dirs.map(l.dir): _*)
   }
 
   /** Version diff: per-key measure values at `vFrom` vs `vTo`, one row
@@ -403,14 +315,13 @@ object IncrementalAggOps {
                    keys: Seq[String], measures: Seq[String],
                    vFrom: Long, vTo: Long): DataFrame = {
     require(vFrom <= vTo, s"diffAggStore: vFrom $vFrom > vTo $vTo")
-    val rows = manifestRows(spark, basePath)
-    val touched = rows
-      .filter(r => r._2 >= 0 && r._1 > vFrom && r._1 <= vTo)
-      .map(_._2).toSet
+    val l = layout(basePath)
+    val manifest = ManifestIO.entries(spark, l)
+    val touched = manifest
+      .filter(e => e.part >= 0 && e.c > vFrom && e.c <= vTo)
+      .map(_.part).toSet
     def side(v: Long, suffix: String): DataFrame = {
-      val dirs = dirsAt(rows, basePath, v)
-        .filter(d => touched.contains(
-          d.substring(d.lastIndexOf('=') + 1).toInt))
+      val dirs = ManifestIO.resolve(manifest, v).filter(e => touched(e.part))
       val cols = (keys.map(col) ++
         measures.map(m => col(m).as(s"${m}_$suffix")))
       // empty side: schema only — off the CURRENT store, so a diff over
@@ -418,8 +329,8 @@ object IncrementalAggOps {
       if (dirs.isEmpty)
         readAggStore(spark, basePath).select(cols: _*).limit(0)
       else {
-        requireUnvacuumed(spark, basePath, v, dirs)
-        spark.read.parquet(dirs: _*).select(cols: _*)
+        ManifestIO.requireRetained(spark, l, v, dirs)
+        spark.read.parquet(dirs.map(l.dir): _*).select(cols: _*)
       }
     }
     side(vFrom, "from").join(side(vTo, "to"), keys.toIndexedSeq, "full_outer")

@@ -20,12 +20,12 @@ import org.apache.spark.sql.functions._
   * the rest of A, B and J is never read or written (spec-asserted
   * byte-for-byte).
   *
-  * Durability: every refresh is MANIFEST-COMMITTED, the same
-  * write-ahead shape as [[VectorStoreOps]]. Data lives under
-  * `side/c=<commit>/__bucket=<b>/` (side ∈ a, b, j) and one `_manifest`
-  * parquet of `(c, side, bucket, tag)` rows names the live
-  * directories; reads resolve the manifest and never list the side
-  * trees. A refresh writes ΔA, ΔB and ΔJ as commit `N` of their sides
+  * Durability: every refresh is MANIFEST-COMMITTED through
+  * [[graft.util.ManifestIO]], the commit core every manifest-committed
+  * store shares. Data lives under `side/c=<commit>/__bucket=<b>/`
+  * (side ∈ a, b, j) and one manifest of (side, commit, bucket, tag)
+  * entries names the live directories; reads resolve the manifest and
+  * never list the side trees. A refresh writes ΔA, ΔB and ΔJ as commit `N` of their sides
   * FIRST and publishes all three with ONE manifest append — so a crash
   * anywhere inside the multi-table apply leaves nothing visible, and a
   * retry overwrites the torn commit directories at the same id before
@@ -34,8 +34,7 @@ import org.apache.spark.sql.functions._
   * ([[joinViewSinkA]]): the one append is simultaneously the data
   * commit and the replay marker. Compaction rewrites fragmented buckets
   * into a new commit per side, swaps the manifest (tags preserved as
-  * `bucket = -1` markers when their data rows are superseded), then
-  * GCs.
+  * markers when their data rows are superseded), then GCs.
   *
   * Inner equi-join, append-only sides (retraction of join rows needs
   * multiplicity bookkeeping — out of scope here; use the
@@ -51,10 +50,17 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalJoinOps {
 
+  import graft.util.ManifestIO
+  import ManifestIO.Entry
+
   private val BUCKET = "__bucket"
   private val Sides = Seq("a", "b", "j")
 
-  private def manifestPath(base: String) = s"$base/_manifest"
+  /** `base/<side>/c=<commit>/__bucket=<b>/`, committed through
+    * [[ManifestIO]]: one manifest for all three sides (the entry's tree
+    * is the side), so a refresh publishes ΔA, ΔB and ΔJ with ONE append. */
+  private def layout(base: String) = ManifestIO.Layout(base, "c", BUCKET)
+
   private def schemaPath(base: String, side: String) = s"$base/$side/_schema"
 
   /** A side's schema as an empty frame, from its side-car — no data-dir
@@ -62,77 +68,27 @@ object IncrementalJoinOps {
   private def emptySide(spark: SparkSession, base: String, side: String): DataFrame =
     spark.read.parquet(schemaPath(base, side)).filter(lit(false))
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** (commit, side, bucket, tag); `bucket = -1` rows are pure tag
-    * markers kept when a tagged commit's data dirs are compacted away
-    * (the replay guard must outlive the data it guarded). */
-  private final case class ManifestRow(c: Long, side: String, bucket: Int,
-                                       tag: Option[Long])
-
-  private def manifestExists(spark: SparkSession, base: String): Boolean =
-    graft.util.ManifestIO.exists(spark, manifestPath(base))
-
-  private def readManifest(spark: SparkSession, base: String): Array[ManifestRow] = {
-    if (!manifestExists(spark, base)) Array.empty
-    else graft.util.ManifestIO.read(spark, manifestPath(base))
-      .select("c", "side", "bucket", "tag")
-      .collect().map(r => ManifestRow(r.getLong(0), r.getString(1),
-        r.getInt(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-  }
-
-  /** Publish manifest rows through [[graft.util.ManifestIO]] (shared
-    * with [[VectorStoreOps]] so the swap semantics can't drift):
-    * appends land inside the live manifest version, full rewrites swap
-    * in a NEW version beside it — a crash mid-swap leaves the prior
-    * committed manifest live instead of bricking the view. */
-  private def writeManifest(spark: SparkSession, base: String,
-                            rows: Seq[ManifestRow], append: Boolean): Unit = {
-    import spark.implicits._
-    val df = rows.map(r => (r.c, r.side, r.bucket, r.tag))
-      .toDF("c", "side", "bucket", "tag")
-    // only the manifest's own listing can go stale: data commits land in
-    // NEW directories (never cached before they're in the manifest), and
-    // dirs dropped from the manifest are never resolved again — a
-    // whole-base refresh would just re-list every live dir per refresh
-    if (append) graft.util.ManifestIO.append(spark, manifestPath(base), df)
-    else graft.util.ManifestIO.swap(spark, manifestPath(base), df)
-  }
-
   private def withBucket(df: DataFrame, key: String, nBuckets: Int): DataFrame =
     df.withColumn(BUCKET, pmod(hash(col(key)), lit(nBuckets)))
 
-  /** Buckets a just-written commit directory materialized — one
-    * driver-side listing, bounded by nBuckets. */
-  private def writtenBuckets(spark: SparkSession, commitDir: String): Seq[Int] = {
-    val fs = hadoopFs(spark, commitDir)
-    val p = new org.apache.hadoop.fs.Path(commitDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$BUCKET="))
-      .map(_.getPath.getName.stripPrefix(s"$BUCKET=").toInt)
-  }
+  /** Rows of `side`'s `dirs`, or `like`'s schema when there are none
+    * (sides and their deltas share schemas by contract). */
+  private def readDirs(spark: SparkSession, base: String, side: String,
+                       dirs: Seq[Entry], like: => DataFrame): DataFrame =
+    if (dirs.isEmpty) like.filter(lit(false))
+    else spark.read.option("basePath", layout(base).treeDir(side))
+      .parquet(dirs.map(layout(base).dir): _*)
+      .drop("c", BUCKET)
 
   /** A side's live rows, optionally restricted to `buckets` — the
     * restriction prunes at DIR-RESOLUTION time (only the touched
-    * buckets' directories are even listed). `like` supplies the schema
-    * when no live dir matches (sides and their deltas share schemas by
-    * contract). */
+    * buckets' directories are even listed). */
   private def readSideLive(spark: SparkSession, base: String, side: String,
-                           manifest: Array[ManifestRow],
-                           buckets: Option[Set[Int]],
-                           like: => DataFrame): DataFrame = {
-    val dirs = manifest
-      .filter(r => r.side == side && r.bucket >= 0 &&
-        buckets.forall(_.contains(r.bucket)))
-      .map(r => s"$base/$side/c=${r.c}/$BUCKET=${r.bucket}")
-    if (dirs.isEmpty) like.filter(lit(false))
-    else spark.read.option("basePath", s"$base/$side")
-      .parquet(dirs.toIndexedSeq: _*)
-      .drop("c", BUCKET)
-  }
+                           manifest: Seq[Entry],
+                           buckets: Option[Set[Long]],
+                           like: => DataFrame): DataFrame =
+    readDirs(spark, base, side, manifest.filter(e =>
+      e.tree == side && e.isData && buckets.forall(_.contains(e.part))), like)
 
   /** Initial build: persists `a`, `b` and their join under `base` as
     * commit 0 of each side, published by one manifest write. Overwrite
@@ -148,30 +104,30 @@ object IncrementalJoinOps {
     val reserved = (a.columns ++ b.columns).toSet.intersect(Set("c", BUCKET))
     require(reserved.isEmpty,
       s"column name(s) $reserved are reserved by the view's layout")
-    val fs = hadoopFs(spark, base)
-    fs.delete(new org.apache.hadoop.fs.Path(manifestPath(base)), true)
-    Sides.foreach(s =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$s"), true))
+    val l = layout(base)
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (l.manifest +: Sides.map(l.treeDir)).foreach(p =>
+      fs.delete(new org.apache.hadoop.fs.Path(p), true))
     // the three sides' builds are INDEPENDENT jobs writing disjoint
     // paths — submit them concurrently so each job's task tail
     // back-fills the next (the manifest, the single commit point,
     // still lands once and last)
     val sides = IndexedSeq(("a", a), ("b", b), ("j", a.join(b, key)))
-    val rowsBySide = new Array[Seq[ManifestRow]](sides.size)
-    graft.util.Par.run(sides.zipWithIndex.map { case ((side, df), i) => () => {
+    graft.util.Par.run(sides.map { case (side, df) => () => {
       // schema side-car: one empty parquet footer per side, so empty
       // live-dir resolutions (empty initial join, all-empty refreshes,
       // the streamed path's ΔB) get the TRUE schema without listing a
       // single data directory
       df.limit(0).coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(schemaPath(base, side))
-      val dir = s"$base/$side/c=0"
       withBucket(df, key, nBuckets)
-        .write.mode(SaveMode.Overwrite).partitionBy(BUCKET).parquet(dir)
-      rowsBySide(i) =
-        writtenBuckets(spark, dir).map(bk => ManifestRow(0L, side, bk, None))
+        .write.mode(SaveMode.Overwrite).partitionBy(BUCKET)
+        .parquet(l.commitDir(side, 0))
     }}: _*)
-    writeManifest(spark, base, rowsBySide.toIndexedSeq.flatten, append = false)
+    ManifestIO.commit(spark, l, Sides.flatMap(side =>
+      ManifestIO.writtenParts(spark, l, side, 0).map(Entry(side, 0, _))),
+      append = false)
   }
 
   /** Fold new rows into both sides and the view. Either delta may be
@@ -181,10 +137,8 @@ object IncrementalJoinOps {
   def appendToJoinView(dA: DataFrame, dB: DataFrame, spark: SparkSession,
                        base: String, key: String, nBuckets: Int = 64,
                        tag: Option[Long] = None): Unit = {
-    require(manifestExists(spark, base),
-      s"no join view at $base — writeJoinView first")
     applyManifest(dA, dB, spark, base, key, nBuckets, tag,
-      readManifest(spark, base))
+      ManifestIO.entries(spark, layout(base)))
   }
 
   /** The refresh against an already-read manifest — each public entry
@@ -206,56 +160,49 @@ object IncrementalJoinOps {
   private def applyManifest(dA: DataFrame, dB: DataFrame, spark: SparkSession,
                             base: String, key: String, nBuckets: Int,
                             tag: Option[Long],
-                            manifest: Array[ManifestRow]): Unit = {
-    val next = (manifest.map(_.c) :+ -1L).max + 1
-    def deltaDir(side: String) = s"$base/$side/c=$next"
+                            manifest: Seq[Entry]): Unit = {
+    val l = layout(base)
+    val next = ManifestIO.nextCommit(manifest)
     def writeDelta(side: String, d: DataFrame): Unit =
       // overwrite: a torn previous attempt at this commit id is replaced
       withBucket(d, key, nBuckets)
-        .write.mode(SaveMode.Overwrite).partitionBy(BUCKET).parquet(deltaDir(side))
+        .write.mode(SaveMode.Overwrite).partitionBy(BUCKET)
+        .parquet(l.commitDir(side, next))
+    def written(side: String): Seq[Entry] =
+      ManifestIO.writtenParts(spark, l, side, next)
+        .map(Entry(side, next, _, tag = tag.map(_.toString)))
     graft.util.Par.run(() => writeDelta("a", dA), () => writeDelta("b", dB))
-    val bkA = writtenBuckets(spark, deltaDir("a"))
-    val bkB = writtenBuckets(spark, deltaDir("b"))
+    val wA = written("a")
+    val wB = written("b")
     // the just-written commit dirs read back: a stable on-disk snapshot
     // of each delta (`like` supplies the schema when the delta was empty
     // and wrote no bucket directory)
-    def readDelta(side: String, bks: Seq[Int], like: => DataFrame): DataFrame =
-      if (bks.isEmpty) like.filter(lit(false))
-      else spark.read.option("basePath", s"$base/$side")
-        .parquet(bks.map(bk => s"${deltaDir(side)}/$BUCKET=$bk"): _*)
-        .drop("c", BUCKET)
-    val dAr = readDelta("a", bkA, dA)
-    val dBr = readDelta("b", bkB, dB)
+    val dAr = readDirs(spark, base, "a", wA, dA)
+    val dBr = readDirs(spark, base, "b", wB, dB)
     // pre-append states by construction: readSideLive resolves the
     // manifest read before any new directory landed, so the commit dirs
     // written above are invisible to these resolutions
-    val aAff = readSideLive(spark, base, "a", manifest, Some(bkB.toSet), dA)
-    val bAff = readSideLive(spark, base, "b", manifest, Some(bkA.toSet), dB)
+    val aAff = readSideLive(spark, base, "a", manifest, Some(wB.map(_.part).toSet), dA)
+    val bAff = readSideLive(spark, base, "b", manifest, Some(wA.map(_.part).toSet), dB)
     val deltaJ = dAr.join(bAff, key)
       .unionByName(aAff.join(dBr, key))
       .unionByName(dAr.join(dBr, key))
-    withBucket(deltaJ, key, nBuckets)
-      .write.mode(SaveMode.Overwrite).partitionBy(BUCKET).parquet(deltaDir("j"))
-    val rows = Seq(("a", bkA), ("b", bkB),
-      ("j", writtenBuckets(spark, deltaDir("j")))).flatMap { case (side, bks) =>
-      bks.map(bk => ManifestRow(next, side, bk, tag))
-    }
+    writeDelta("j", deltaJ)
+    val rows = wA ++ wB ++ written("j")
     // an all-empty tagged refresh still records its replay marker
     val withMarker =
       if (rows.nonEmpty || tag.isEmpty) rows
-      else Seq(ManifestRow(next, "j", -1, tag))
+      else Seq(Entry("", next, -1, tag = tag.map(_.toString)))
     // the commit point for all three tables at once
     if (withMarker.nonEmpty)
-      writeManifest(spark, base, withMarker, append = true)
+      ManifestIO.commit(spark, l, withMarker, append = true)
   }
 
   /** The maintained join (all buckets); a live-but-empty view (no key
     * overlap yet) is an empty frame, not an error. */
   def readJoinView(spark: SparkSession, base: String): DataFrame = {
-    require(manifestExists(spark, base), s"no join view at $base")
-    val manifest = readManifest(spark, base)
-    readSideLive(spark, base, "j", manifest, None,
-      emptySide(spark, base, "j"))
+    readSideLive(spark, base, "j", ManifestIO.entries(spark, layout(base)),
+      None, emptySide(spark, base, "j"))
   }
 
   /** [[appendToJoinView]] for side A guarded by a batch tag: a tag
@@ -267,10 +214,8 @@ object IncrementalJoinOps {
     * side-car ledger does not exist here. */
   def appendSideATagged(batch: DataFrame, spark: SparkSession, base: String,
                         key: String, nBuckets: Int, tag: Long): Boolean = {
-    require(manifestExists(spark, base),
-      s"no join view at $base — writeJoinView first")
-    val manifest = readManifest(spark, base)
-    if (manifest.exists(_.tag.contains(tag))) false
+    val manifest = ManifestIO.entries(spark, layout(base))
+    if (manifest.exists(_.tag.contains(tag.toString))) false
     else {
       // an empty frame with the TRUE b-side schema from the side-car —
       // no listing, valid even before any B data exists (the
@@ -310,40 +255,13 @@ object IncrementalJoinOps {
 
   /** Sweep every data directory the manifest no longer names —
     * deferred compaction GC (`gc = false`) and torn-apply orphans
-    * alike; see [[VectorStoreOps.vacuumStore]] for the contract
-    * (including the skip of commit dirs numbered past the manifest's
-    * max — the slot a concurrent refresh or compaction is writing
-    * into before its publish). */
+    * alike ([[ManifestIO.sweep]], which skips commit dirs numbered past
+    * the manifest's max — the slot a concurrent refresh or compaction
+    * is writing into before its publish). */
   def vacuumJoinView(spark: SparkSession, base: String): Unit = {
-    require(manifestExists(spark, base), s"no join view at $base")
-    val manifest = readManifest(spark, base)
-    val maxCommitted = (manifest.map(_.c) :+ -1L).max
-    val fs = hadoopFs(spark, base)
-    Sides.foreach { side =>
-      val live = manifest
-        .filter(r => r.side == side && r.bucket >= 0)
-        .map(r => (r.c, r.bucket)).toSet
-      val root = new org.apache.hadoop.fs.Path(s"$base/$side")
-      if (fs.exists(root)) {
-        fs.listStatus(root)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("c="))
-          .filter(_.getPath.getName.stripPrefix("c=").toLong <= maxCommitted)
-          .foreach { cDir =>
-            val c = cDir.getPath.getName.stripPrefix("c=").toLong
-            fs.listStatus(cDir.getPath)
-              .filter(st => st.isDirectory &&
-                st.getPath.getName.startsWith(s"$BUCKET="))
-              .foreach { bDir =>
-                val bk = bDir.getPath.getName.stripPrefix(s"$BUCKET=").toInt
-                if (!live((c, bk))) fs.delete(bDir.getPath, true)
-              }
-            if (!fs.listStatus(cDir.getPath).exists(st =>
-                st.isDirectory && st.getPath.getName.startsWith(s"$BUCKET=")))
-              fs.delete(cDir.getPath, true)
-          }
-      }
-    }
-    spark.catalog.refreshByPath(base)
+    val l = layout(base)
+    val manifest = ManifestIO.entries(spark, l)
+    ManifestIO.sweep(spark, l, Sides, manifest, manifest)
   }
 
   /** Small-files maintenance: every refresh appends one file per
@@ -351,95 +269,43 @@ object IncrementalJoinOps {
     * linearly in refresh count. Rewrite each bucket of the three tables
     * that holds more than `maxFilesPerBucket` LIVE files into a new
     * commit of its side — bucket layout (and therefore refresh
-    * locality) preserved, data unchanged (spec-asserted); the manifest
-    * swap retains ingest tags whose data rows are superseded as
-    * `bucket = -1` markers. Buckets under the threshold keep their
+    * locality) preserved, data unchanged (spec-asserted); the
+    * [[ManifestIO.rewrite]] swap retains ingest tags whose data rows are
+    * superseded as markers. Buckets under the threshold keep their
     * files byte-untouched. File counting is ONE recursive listing per
-    * side, never a per-directory listStatus loop. (Keep the
-    * manifest-swap/marker/GC shape in sync with
-    * [[VectorStoreOps]].rewriteCells, the other manifest-committed
-    * store.) */
+    * side, never a per-directory listStatus loop. */
   def compactJoinView(spark: SparkSession, base: String,
                       maxFilesPerBucket: Int = 4,
                       gc: Boolean = true): Unit = {
-    require(manifestExists(spark, base), s"no join view at $base")
     // ONE manifest read and ONE swap for all three sides: their manifest
-    // rows are disjoint (the side column), so the per-side rewrites can
-    // all land first — under one shared commit id, in per-side dirs —
-    // and a single swap publishes everything. The per-side
-    // read/swap/read/swap round-trip this replaces paid two extra
-    // manifest resolutions and two extra versioned swaps per compaction
-    // for no added safety: a crash before the one swap leaves the prior
-    // manifest live and the orphan c=<next> dirs are the same in-flight
-    // slot a torn refresh leaves (vacuum skips them; the next writer
-    // overwrites them).
-    val manifest = readManifest(spark, base)
-    val fs = hadoopFs(spark, base)
-    val next = manifest.map(_.c).max + 1
-    var kept = manifest.toIndexedSeq
-    var newRows = IndexedSeq.empty[ManifestRow]
-    var droppedAll = IndexedSeq.empty[ManifestRow]
-    Sides.foreach { side =>
-      val live = manifest
-        .filter(r => r.side == side && r.bucket >= 0)
-        .map(r => (r.c, r.bucket)).toSet
-      val counts = scala.collection.mutable.Map.empty[Int, Int]
-      val root = new org.apache.hadoop.fs.Path(s"$base/$side")
-      if (fs.exists(root)) {
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val f = it.next().getPath
-          if (f.getName.endsWith(".parquet")) {
-            val bDir = f.getParent
-            val cDir = bDir.getParent
-            if (bDir.getName.startsWith(s"$BUCKET=") &&
-                cDir.getName.startsWith("c=")) {
-              val bk = bDir.getName.stripPrefix(s"$BUCKET=").toInt
-              val c = cDir.getName.stripPrefix("c=").toLong
-              if (live((c, bk)))
-                counts.update(bk, counts.getOrElse(bk, 0) + 1)
-            }
-          }
-        }
-      }
-      val frag = counts.filter(_._2 > maxFilesPerBucket).keySet.toSet
+    // entries are disjoint (the tree is the side), so the per-side
+    // rewrites can all land first — under one shared commit id, in
+    // per-side dirs — and a single swap publishes everything. A crash
+    // before the swap leaves the prior manifest live and the orphan
+    // c=<next> dirs are the same in-flight slot a torn refresh leaves
+    // (vacuum skips them; the next writer overwrites them).
+    val l = layout(base)
+    val manifest = ManifestIO.entries(spark, l)
+    val next = ManifestIO.nextCommit(manifest)
+    val rewritten = Sides.flatMap { side =>
+      val live = manifest.filter(e => e.tree == side && e.isData)
+      val frag = ManifestIO.liveFileCounts(spark, l, side, live)
+        .filter(_._2 > maxFilesPerBucket).keySet
       if (frag.nonEmpty) {
-        val dirs = manifest
-          .filter(r => r.side == side && frag(r.bucket))
-          .map(r => s"$base/$side/c=${r.c}/$BUCKET=${r.bucket}")
-        val commitDir = s"$base/$side/c=$next"
-        spark.read.option("basePath", s"$base/$side")
-          .parquet(dirs.toIndexedSeq: _*)
+        spark.read.option("basePath", l.treeDir(side))
+          .parquet(live.filter(e => frag(e.part)).map(l.dir): _*)
           .drop("c")
           .withColumn(BUCKET, col(BUCKET).cast("int"))
           .repartition(frag.size, col(BUCKET))
-          .write.mode(SaveMode.Overwrite).partitionBy(BUCKET).parquet(commitDir)
-        val surviving = writtenBuckets(spark, commitDir)
-        val (dropped, keptRest) = kept
-          .partition(r => r.side == side && r.bucket >= 0 && frag(r.bucket))
-        kept = keptRest
-        newRows ++= surviving.map(bk => ManifestRow(next, side, bk, None))
-        droppedAll ++= dropped
+          .write.mode(SaveMode.Overwrite).partitionBy(BUCKET)
+          .parquet(l.commitDir(side, next))
       }
+      frag.map((side, _))
     }
-    if (droppedAll.nonEmpty) {
-      // tags whose every data row was superseded survive as pure
-      // markers — the replay guard must outlive the data it guarded
-      val markers = droppedAll.flatMap(_.tag).distinct
-        .filterNot(t => kept.exists(_.tag.contains(t)))
-        .map(t => ManifestRow(next, "j", -1, Some(t)))
-      writeManifest(spark, base, kept ++ markers ++ newRows, append = false)
-      // post-commit GC; orphans from a crash here are invisible.
-      // `gc = false` defers deletion so in-flight readers resolved
-      // against the old manifest keep their files (sweep later)
-      if (gc) droppedAll.foreach { r =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$base/${r.side}/c=${r.c}/$BUCKET=${r.bucket}"), true)
-        val cdir = new org.apache.hadoop.fs.Path(s"$base/${r.side}/c=${r.c}")
-        if (fs.exists(cdir) && !fs.listStatus(cdir).exists(st =>
-            st.isDirectory && st.getPath.getName.startsWith(s"$BUCKET=")))
-          fs.delete(cdir, true)
-      }
-    }
+    if (rewritten.nonEmpty)
+      ManifestIO.rewrite(spark, l, manifest, next, rewritten.toSet,
+        Sides.flatMap(side => ManifestIO.writtenParts(spark, l, side, next)
+          .map(Entry(side, next, _))),
+        gc)
   }
 }

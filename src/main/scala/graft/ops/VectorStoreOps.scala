@@ -23,18 +23,18 @@ import org.apache.spark.sql.functions._
   * partition pruning eliminates at file-listing time; bucketing would
   * only co-locate a shuffle that the broadcast probe join doesn't need.
   *
-  * Durability: every mutation is MANIFEST-COMMITTED. Data lives under
-  * `items/c=<commit>/cid=<cell>/` and a tiny `_manifest` parquet of
-  * `(c, cid)` rows names the live directories; reads resolve the
-  * manifest and never list `items/` itself, so a torn ingest (task or
-  * job death after some cell files landed but before the manifest row)
-  * is INVISIBLE — the next search returns exactly the last committed
-  * state, and a retried append overwrites the torn commit directory
-  * before publishing it. Delete and compaction write their rewritten
-  * cells as a NEW commit, swap the manifest, and only then garbage-
-  * collect the superseded directories — the same write-ahead shape as
-  * [[VersionedStoreOps]]'s `_manifest` (single writer at a time, as
-  * there). The manifest is bounded by live (commit, cell) pairs —
+  * Durability: every mutation is MANIFEST-COMMITTED through
+  * [[graft.util.ManifestIO]], the commit core every manifest-committed
+  * store shares. Data lives under `items/c=<commit>/cid=<cell>/` and the
+  * manifest's (commit, cell) entries name the live directories; reads
+  * resolve the manifest and never list `items/` itself, so a torn
+  * ingest (task or job death after some cell files landed but before
+  * the manifest row) is INVISIBLE — the next search returns exactly the
+  * last committed state, and a retried append overwrites the torn
+  * commit directory before publishing it. Delete and compaction write
+  * their rewritten cells as a NEW commit, swap the manifest, and only
+  * then garbage-collect the superseded directories (single writer at a
+  * time). The manifest is bounded by live (commit, cell) pairs —
   * commits × nlist driver-side rows, the same order as the versioned
   * store's nBuckets × versions.
   *
@@ -56,80 +56,31 @@ import org.apache.spark.sql.functions._
   */
 object VectorStoreOps {
 
-  private def itemsPath(base: String) = s"$base/items"
-  private def manifestPath(base: String) = s"$base/_manifest"
+  import graft.util.ManifestIO
+  import ManifestIO.Entry
+
+  private val Items = "items"
+
+  /** `base/items/c=<commit>/cid=<cell>/`, committed through
+    * [[ManifestIO]]. A manifest entry is a live (commit, cell) dir plus
+    * the OPTIONAL ingest tag that committed it — the idempotence key for
+    * streamed batches (see [[ingestStream]]): a replayed batch finds its
+    * tag already present and skips, so the manifest append is
+    * simultaneously the data commit AND the processed-marker, with no
+    * second file whose write could tear away from the first. The store
+    * is INITIALIZED iff a committed manifest exists — a store deleted
+    * down to zero rows keeps an (empty) manifest and stays appendable. */
+  private def layout(base: String) = ManifestIO.Layout(base, "c", "cid")
+
+  private def itemsPath(base: String) = layout(base).treeDir(Items)
 
   private def hadoopFs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** One manifest row: a live (commit, cell) directory, plus the
-    * OPTIONAL ingest tag that committed it — the idempotence key for
-    * streamed batches (see [[ingestStream]]): a replayed batch finds its
-    * tag already present and skips, so the manifest append is
-    * simultaneously the data commit AND the processed-marker, with no
-    * second file whose write could tear away from the first. */
-  private final case class ManifestRow(c: Long, cid: Long, tag: Option[Long])
-
-  /** The store is INITIALIZED iff a committed manifest version exists
-    * ([[graft.util.ManifestIO.exists]]) — a store deleted down to zero
-    * rows keeps an (empty) manifest and stays appendable. ONLY a
-    * missing manifest means fresh — a transient read failure must
-    * propagate, or an append would treat a live store as empty (see
-    * [[VersionedStoreOps.currentVersion]]). */
-  private def manifestExists(spark: SparkSession, base: String): Boolean =
-    graft.util.ManifestIO.exists(spark, manifestPath(base))
-
-  private def parseManifest(df: DataFrame): Array[ManifestRow] =
-    df.select("c", "cid", "tag")
-      .collect().map(r => ManifestRow(r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2))))
-
-  private def readManifestRows(spark: SparkSession, base: String): Array[ManifestRow] = {
-    if (!manifestExists(spark, base)) Array.empty
-    else parseManifest(graft.util.ManifestIO.read(spark, manifestPath(base)))
-  }
-
-  /** Live (commit, cell) DIRECTORIES: manifest rows minus the pure tag
-    * markers (cid = -1) that [[rewriteCells]] retains when a tagged
-    * commit's directories are compacted or deleted away — the replay
-    * guard must outlive the data it guarded, or a late replay of an
-    * already-ingested batch would re-ingest it after a compaction. */
-  private def liveDirRows(rows: Array[ManifestRow]): Array[ManifestRow] =
-    rows.filter(_.cid >= 0)
-
-  private def readManifest(spark: SparkSession, base: String): Array[(Long, Long)] =
-    liveDirRows(readManifestRows(spark, base)).map(r => (r.c, r.cid))
-
-  /** Publish manifest rows through [[graft.util.ManifestIO]]: appends
-    * land inside the live version, full rewrites swap in a NEW version
-    * beside it — at no point is the store without a committed manifest
-    * (a crash mid-swap leaves the prior version live; the old flat
-    * `SaveMode.Overwrite` rewrite bricked the store in that window). */
-  private def writeManifest(spark: SparkSession, base: String,
-                            rows: Seq[ManifestRow], append: Boolean,
-                            retainHistory: Boolean = false): Unit = {
+  private def emptyStore(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val df = rows.map(r => (r.c, r.cid, r.tag)).toDF("c", "cid", "tag")
-    if (append) graft.util.ManifestIO.append(spark, manifestPath(base), df)
-    else graft.util.ManifestIO.swap(spark, manifestPath(base), df,
-      retainHistory)
-    // prefix-invalidate the session's file-listing cache for the whole
-    // store (manifest AND item dirs) — the sibling stores do the same
-    spark.catalog.refreshByPath(base)
-  }
-
-  /** Cell ids a just-written commit directory actually materialized —
-    * one driver-side listing of what Spark wrote, instead of a second
-    * pass over the assignment to collect distinct cids. Bounded by
-    * nlist. */
-  private def writtenCells(spark: SparkSession, commitDir: String): Seq[Long] = {
-    val fs = hadoopFs(spark, commitDir)
-    val p = new org.apache.hadoop.fs.Path(commitDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cid="))
-      .map(_.getPath.getName.stripPrefix("cid=").toLong)
+    Seq.empty[(Long, Array[Float], Long)].toDF("item_id", "cv", "cid")
   }
 
   /** The COMMITTED store contents: `(item_id, cv, cid)`. Resolves the
@@ -137,16 +88,11 @@ object VectorStoreOps {
     * torn (uncommitted) ingest are never included. This is the ONLY way
     * the store's data is read, internally and by callers. */
   def readStore(spark: SparkSession, basePath: String): DataFrame = {
-    require(manifestExists(spark, basePath),
-      s"no committed vector store at $basePath")
-    val manifest = readManifest(spark, basePath)
-    if (manifest.isEmpty) {
-      // emptied-but-alive store (delete-to-zero): an empty result, not
-      // an error — a serving endpoint over a compliance-emptied tenant
-      // store must answer queries with zero rows until the next append
-      import spark.implicits._
-      Seq.empty[(Long, Array[Float], Long)].toDF("item_id", "cv", "cid")
-    } else readStoreFrom(spark, basePath, manifest)
+    val live = ManifestIO.entries(spark, layout(basePath)).filter(_.isData)
+    // emptied-but-alive store (delete-to-zero): an empty result, not an
+    // error — a serving endpoint over a compliance-emptied tenant store
+    // must answer queries with zero rows until the next append
+    if (live.isEmpty) emptyStore(spark) else readStoreFrom(spark, basePath, live)
   }
 
   /** Current committed manifest version — the handle to remember
@@ -156,32 +102,23 @@ object VectorStoreOps {
     * versions advance exactly at the rewriting mutations — the
     * rollback/audit points. */
   def storeVersion(spark: SparkSession, basePath: String): Long =
-    graft.util.ManifestIO.maxVersion(spark, manifestPath(basePath))
+    ManifestIO.maxVersion(spark, layout(basePath).manifest)
 
   /** TIME TRAVEL: the store contents exactly as committed at manifest
     * version `v` ([[storeVersion]]) — each cell resolved through THAT
     * manifest snapshot, so a later delete/compaction is invisible.
     * Requires the history to still exist: mutate with `gc = false` and
     * vacuum with a retention floor; a reclaimed version or data dir
-    * fails loudly ([[graft.util.ManifestIO.readAt]] / the dir check
-    * here), never silently substitutes newer data. */
+    * fails loudly ([[ManifestIO.readAt]] /
+    * [[ManifestIO.requireRetained]]), never silently substitutes newer
+    * data. */
   def readStoreAt(spark: SparkSession, basePath: String, v: Long): DataFrame = {
-    val rows = parseManifest(graft.util.ManifestIO.readAt(
-      spark, manifestPath(basePath), v))
-    val live = liveDirRows(rows)
-    if (live.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(Long, Array[Float], Long)].toDF("item_id", "cv", "cid")
-    } else {
-      val fs = hadoopFs(spark, basePath)
-      live.foreach { r =>
-        val d = s"${itemsPath(basePath)}/c=${r.c}/cid=${r.cid}"
-        require(fs.exists(new org.apache.hadoop.fs.Path(d)),
-          s"store version $v predates the GC/vacuum retention: $d was " +
-            "reclaimed (mutate with gc = false and vacuum with a " +
-            "retention floor to keep older reads alive)")
-      }
-      readStoreFrom(spark, basePath, live.map(r => (r.c, r.cid)))
+    val l = layout(basePath)
+    val live = ManifestIO.entriesAt(spark, l, v).filter(_.isData)
+    if (live.isEmpty) emptyStore(spark)
+    else {
+      ManifestIO.requireRetained(spark, l, v, live)
+      readStoreFrom(spark, basePath, live)
     }
   }
 
@@ -206,7 +143,7 @@ object VectorStoreOps {
   }
 
   private def readStoreFrom(spark: SparkSession, base: String,
-                            manifest: Array[(Long, Long)]): DataFrame = {
+                            manifest: Seq[Entry]): DataFrame = {
     val raw = readStoreRawFrom(spark, base, manifest)
     if (raw.columns.contains("cv_q"))
       // int8 tier: restore floats at the scan (one float multiply per
@@ -320,10 +257,9 @@ object VectorStoreOps {
     * maintenance path must read this, never the dequantizing view, or a
     * delete/compaction rewrite would silently de-quantize the store. */
   private def readStoreRawFrom(spark: SparkSession, base: String,
-                               manifest: Array[(Long, Long)]): DataFrame = {
-    val dirs = manifest.map { case (c, cid) => s"${itemsPath(base)}/c=$c/cid=$cid" }
+                               manifest: Seq[Entry]): DataFrame = {
     spark.read.option("basePath", itemsPath(base))
-      .parquet(dirs.toIndexedSeq: _*)
+      .parquet(manifest.map(layout(base).dir): _*)
       .drop("c")
       .withColumn("cid", col("cid").cast("long"))
   }
@@ -410,13 +346,13 @@ object VectorStoreOps {
     require(Seq(quantize, pqCodebook.isDefined, pqResidual.isDefined)
       .count(identity) <= 1,
       "vector store: pick ONE storage tier (int8, pq or residual pq)")
+    val l = layout(basePath)
     val fs = hadoopFs(spark, basePath)
-    fs.delete(new org.apache.hadoop.fs.Path(manifestPath(basePath)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(itemsPath(basePath)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(pqCodebookPath(basePath)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(pqResCodebookPath(basePath)), true)
+    Seq(l.manifest, itemsPath(basePath), pqCodebookPath(basePath),
+      pqResCodebookPath(basePath)).foreach(p =>
+      fs.delete(new org.apache.hadoop.fs.Path(p), true))
     val asg = assigned(spark, corpus, cents, idCol, vecCol, assignRound)
-    val commitDir = s"${itemsPath(basePath)}/c=0"
+    val commitDir = l.commitDir(Items, 0)
     def writeCents(): Unit =
       cents.coalesce(1).write.mode("overwrite").parquet(s"$basePath/centroids")
     // the centroid table and the assigned-items commit are independent
@@ -450,8 +386,8 @@ object VectorStoreOps {
           () => maybeQuantize(asg, quantize)
             .write.mode("overwrite").partitionBy("cid").parquet(commitDir))
     }
-    writeManifest(spark, basePath,
-      writtenCells(spark, commitDir).map(cid => ManifestRow(0L, cid, None)),
+    ManifestIO.commit(spark, l,
+      ManifestIO.writtenParts(spark, l, Items, 0).map(Entry(Items, 0, _)),
       append = false)
   }
 
@@ -481,23 +417,20 @@ object VectorStoreOps {
                            basePath: String, tag: Option[Long],
                            idCol: String, vecCol: String,
                            assignRound: Option[Int]): Boolean = {
-    require(manifestExists(spark, basePath),
-      s"no committed vector store at $basePath — writeVectorStore first")
-    val manifest = readManifestRows(spark, basePath)
-    if (tag.isDefined && manifest.exists(_.tag == tag)) false
+    val l = layout(basePath)
+    val manifest = ManifestIO.entries(spark, l)
+    if (tag.exists(t => manifest.exists(_.tag.contains(t.toString)))) false
     else {
       val cents = spark.read.parquet(s"$basePath/centroids")
-      val next = (manifest.map(_.c) :+ -1L).max + 1
-      val commitDir = s"${itemsPath(basePath)}/c=$next"
+      val next = ManifestIO.nextCommit(manifest)
       // appends inherit the store's storage tier (one footer-read
       // probe); a store deleted down to zero live dirs has no tier to
       // inherit — new commits re-establish it as float (either tier is
       // consistent when no prior data rows exist)
-      val live = liveDirRows(manifest)
+      val live = manifest.filter(_.isData)
       val tierCols =
         if (live.isEmpty) Array.empty[String]
-        else readStoreRawFrom(spark, basePath,
-          live.take(1).map(r => (r.c, r.cid))).columns
+        else readStoreRawFrom(spark, basePath, live.take(1)).columns
       val asg = assigned(spark, delta, cents, idCol, vecCol, assignRound)
       val physical =
         if (tierCols.contains("codes"))
@@ -505,10 +438,10 @@ object VectorStoreOps {
         else if (tierCols.contains("rcodes"))
           encodePqRes(asg, cents, loadPqResCodebook(spark, basePath))
         else maybeQuantize(asg, tierCols.contains("cv_q"))
-      physical.write.mode("overwrite").partitionBy("cid").parquet(commitDir)
-      writeManifest(spark, basePath,
-        writtenCells(spark, commitDir).map(cid => ManifestRow(next, cid, tag)),
-        append = true)
+      physical.write.mode("overwrite").partitionBy("cid")
+        .parquet(l.commitDir(Items, next))
+      ManifestIO.commit(spark, l, ManifestIO.writtenParts(spark, l, Items, next)
+        .map(Entry(Items, next, _, tag = tag.map(_.toString))), append = true)
       true
     }
   }
@@ -550,35 +483,10 @@ object VectorStoreOps {
   def compactVectorStore(spark: SparkSession, basePath: String,
                          maxFilesPerCell: Int = 4,
                          gc: Boolean = true): Unit = {
-    require(manifestExists(spark, basePath),
-      s"no committed vector store at $basePath")
-    val manifest = readManifestRows(spark, basePath)
-    // ONE recursive listing of items/ (a batched RemoteIterator — O(1)
-    // filesystem round trips, not commits x nlist sequential
-    // listStatus calls on an object store), restricted to LIVE
-    // (commit, cell) dirs so torn-append orphans don't count
-    val live = liveDirRows(manifest).map(r => (r.c, r.cid)).toSet
-    val counts = scala.collection.mutable.Map.empty[Long, Int]
-    val itemsRoot = new org.apache.hadoop.fs.Path(itemsPath(basePath))
-    val fsRoot = hadoopFs(spark, basePath)
-    if (fsRoot.exists(itemsRoot)) {
-      val it = fsRoot.listFiles(itemsRoot, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) {
-          val cellDir = f.getParent   // cid=M
-          val commitDir = cellDir.getParent // c=N
-          if (cellDir.getName.startsWith("cid=") &&
-              commitDir.getName.startsWith("c=")) {
-            val cid = cellDir.getName.stripPrefix("cid=").toLong
-            val c = commitDir.getName.stripPrefix("c=").toLong
-            if (live((c, cid)))
-              counts.update(cid, counts.getOrElse(cid, 0) + 1)
-          }
-        }
-      }
-    }
-    val oversized = counts.filter(_._2 > maxFilesPerCell).keySet.toSet
+    val l = layout(basePath)
+    val manifest = ManifestIO.entries(spark, l)
+    val oversized = ManifestIO.liveFileCounts(spark, l, Items,
+      manifest.filter(_.isData)).filter(_._2 > maxFilesPerCell).keySet
     if (oversized.nonEmpty) {
       rewriteCells(spark, basePath, manifest, oversized, gc = gc)
     }
@@ -595,17 +503,14 @@ object VectorStoreOps {
                             basePath: String,
                             idCol: String = "vec_id",
                             gc: Boolean = true): Unit = {
-    require(manifestExists(spark, basePath),
-      s"no committed vector store at $basePath")
-    val manifest = readManifestRows(spark, basePath)
-    if (liveDirRows(manifest).isEmpty) return // nothing to delete from
+    val manifest = ManifestIO.entries(spark, layout(basePath))
+    val live = manifest.filter(_.isData)
+    if (live.isEmpty) return // nothing to delete from
     // no eager checkpoint: the id set is request-sized and its second
     // consumer (the anti-join inside the rewrite) re-derives it inside
     // that job — one probe job instead of checkpoint + probe
     val del = ids.select(col(idCol).cast("long").as("item_id")).distinct()
-    val items = readStoreFrom(spark, basePath,
-      liveDirRows(manifest).map(r => (r.c, r.cid)))
-    val touched = items.join(del, "item_id")
+    val touched = readStoreFrom(spark, basePath, live).join(del, "item_id")
       .select("cid").distinct().collect().map(_.getLong(0)).toSet // ≤ nlist
     if (touched.nonEmpty) {
       rewriteCells(spark, basePath, manifest, touched,
@@ -613,115 +518,48 @@ object VectorStoreOps {
     }
   }
 
-  /** Shared rewrite-cells-into-a-new-commit step for delete/compaction
-    * (keep the manifest-swap/marker/GC shape in sync with
-    * [[IncrementalJoinOps.compactJoinView]], the other manifest-committed
-    * store — a divergence in the marker rule breaks one side's
-    * exactly-once guarantee silently):
+  /** Shared rewrite-cells-into-a-new-commit step for delete/compaction:
     * read the touched cells from their live dirs, transform, write as
-    * commit `max+1` (one file per cell via the cid repartition), swap
-    * the manifest, then GC the superseded directories. */
+    * commit `max+1` (one file per cell via the cid repartition), then
+    * [[ManifestIO.rewrite]] — swap, ingest tags carried forward as
+    * markers, GC of the superseded dirs. `gc = false` keeps the
+    * superseded manifest version AND its data dirs as a readable
+    * time-travel snapshot ([[readStoreAt]]) until [[vacuumStore]]'s
+    * retention floor reclaims them — the poor man's snapshot isolation
+    * for in-flight readers (readers needing real version pinning use
+    * VersionedStoreOps). */
   private def rewriteCells(spark: SparkSession, basePath: String,
-                           manifest: Array[ManifestRow],
+                           manifest: Seq[Entry],
                            cells: Set[Long],
                            transform: DataFrame => DataFrame = identity,
                            gc: Boolean = true): Unit = {
-    val live = liveDirRows(manifest)
-    val next = manifest.map(_.c).max + 1
-    val commitDir = s"${itemsPath(basePath)}/c=$next"
-    val items = readStoreRawFrom(spark, basePath, live.map(r => (r.c, r.cid)))
+    val l = layout(basePath)
+    val next = ManifestIO.nextCommit(manifest)
+    val items = readStoreRawFrom(spark, basePath, manifest.filter(_.isData))
     transform(items.filter(col("cid").isin(cells.toIndexedSeq: _*)))
       .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(commitDir)
-    val surviving = writtenCells(spark, commitDir)
-    val (dropped, kept) = manifest.toIndexedSeq
-      .partition(r => r.cid >= 0 && cells(r.cid))
-    // ingest tags on rewritten-away rows survive as pure markers
-    // (cid = -1) so a late stream replay still finds its guard
-    val markers = dropped.flatMap(_.tag).distinct
-      .filterNot(t => kept.exists(_.tag.contains(t)))
-      .map(t => ManifestRow(next, -1L, Some(t)))
-    // the commit point: touched cells now resolve ONLY to the new
-    // commit. `gc = false` keeps the superseded MANIFEST VERSION too —
-    // data dirs + manifest snapshot together are a readable
-    // time-travel version ([[readStoreAt]]) until [[vacuumStore]]'s
-    // retention floor reclaims them.
-    writeManifest(spark, basePath,
-      kept ++ markers ++ surviving.map(cid => ManifestRow(next, cid, None)),
-      append = false, retainHistory = !gc)
-    // post-commit GC of superseded dirs — a crash here leaves orphans
-    // that readers (manifest-resolved) never see. `gc = false` defers
-    // the deletion entirely: a DataFrame resolved against the OLD
-    // manifest (an in-flight reader) keeps its files until the caller
-    // sweeps in a quiet window — the poor man's snapshot isolation
-    // (readers needing real version pinning use VersionedStoreOps).
-    if (gc) {
-      val fs = hadoopFs(spark, basePath)
-      dropped.foreach { r =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${itemsPath(basePath)}/c=${r.c}/cid=${r.cid}"), true)
-        // drop a commit dir emptied of its last cell (cosmetic)
-        val cdir = new org.apache.hadoop.fs.Path(s"${itemsPath(basePath)}/c=${r.c}")
-        if (fs.exists(cdir) && !fs.listStatus(cdir).exists(st =>
-            st.isDirectory && st.getPath.getName.startsWith("cid=")))
-          fs.delete(cdir, true)
-      }
-    }
+      .write.mode("overwrite").partitionBy("cid").parquet(l.commitDir(Items, next))
+    ManifestIO.rewrite(spark, l, manifest, next, cells.map((Items, _)),
+      ManifestIO.writtenParts(spark, l, Items, next).map(Entry(Items, next, _)),
+      gc)
   }
 
-  /** Sweep every data directory the manifest no longer names: deferred
-    * delete/compaction GC (`gc = false`) and torn-append orphans alike.
-    * Safe with respect to READERS at any time — they resolve only
-    * manifest-named dirs, so nothing swept is reachable by a NEW
-    * resolution (run it in a quiet window once in-flight readers from
-    * before the deferring mutation have drained — the reason GC was
-    * deferred in the first place). Safe alongside a concurrent WRITER
-    * too, because commit directories NUMBERED PAST the manifest's max
-    * are skipped: every mutation writes its data under commit
-    * `max + 1` before publishing, so an in-flight append's or
-    * rewrite's directory is exactly there — deleting it mid-write
-    * would let the subsequent manifest row publish dangling paths. A
-    * torn attempt left in that slot is overwritten by the next
-    * mutation at the same id, so skipping it loses nothing. */
+  /** Sweep every data directory no retained manifest version names:
+    * deferred delete/compaction GC (`gc = false`) and torn-append
+    * orphans alike ([[ManifestIO.sweep]] — reader-safe, and commit dirs
+    * past the manifest's max, a concurrent writer's slot, are skipped).
+    * `retainVersions` is the retention floor: every data dir some
+    * RETAINED manifest version still resolves stays readable
+    * ([[readStoreAt]]) — the vacuumAggStore(retainVersions) semantics on
+    * the manifest seam; 0 collapses to latest-only. */
   def vacuumStore(spark: SparkSession, basePath: String,
                   retainVersions: Int = 0): Unit = {
-    require(manifestExists(spark, basePath),
-      s"no committed vector store at $basePath")
-    // the retention floor: every data dir some RETAINED manifest
-    // version still resolves stays readable ([[readStoreAt]]) — the
-    // vacuumAggStore(retainVersions) semantics on the manifest seam.
-    // retainVersions = 0 collapses to latest-only (the prior behavior).
-    graft.util.ManifestIO.vacuumVersions(spark, manifestPath(basePath),
-      math.max(0, retainVersions))
-    val retained = graft.util.ManifestIO.versions(spark, manifestPath(basePath))
-    val rows = readManifestRows(spark, basePath)
-    val live = retained.flatMap { v =>
-      liveDirRows(parseManifest(graft.util.ManifestIO.readAt(
-        spark, manifestPath(basePath), v))).map(r => (r.c, r.cid))
-    }.toSet
-    // markers (cid = -1) count toward the committed-commit horizon too
-    val maxCommitted = (rows.map(_.c) :+ -1L).max
-    val fs = hadoopFs(spark, basePath)
-    val root = new org.apache.hadoop.fs.Path(itemsPath(basePath))
-    if (fs.exists(root)) {
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("c="))
-        .filter(_.getPath.getName.stripPrefix("c=").toLong <= maxCommitted)
-        .foreach { cDir =>
-          val c = cDir.getPath.getName.stripPrefix("c=").toLong
-          fs.listStatus(cDir.getPath)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("cid="))
-            .foreach { cellDir =>
-              val cid = cellDir.getPath.getName.stripPrefix("cid=").toLong
-              if (!live((c, cid))) fs.delete(cellDir.getPath, true)
-            }
-          if (!fs.listStatus(cDir.getPath).exists(st =>
-              st.isDirectory && st.getPath.getName.startsWith("cid=")))
-            fs.delete(cDir.getPath, true)
-        }
-      spark.catalog.refreshByPath(itemsPath(basePath))
-    }
+    val l = layout(basePath)
+    ManifestIO.vacuumVersions(spark, l.manifest, math.max(0, retainVersions))
+    val retained = ManifestIO.versions(spark, l.manifest)
+      .map(ManifestIO.entriesAt(spark, l, _))
+    require(retained.nonEmpty, s"no committed vector store at $basePath")
+    ManifestIO.sweep(spark, l, Seq(Items), retained.last, retained.flatten)
   }
 
   /** Shared probe prologue: the query frame scored against the frozen

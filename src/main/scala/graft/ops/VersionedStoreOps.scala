@@ -14,78 +14,46 @@ import org.apache.spark.sql.functions._
   *    only ADD `v=N/__bucket=B/` dirs), and
   *  - storage cost per version ∝ touched buckets, not corpus size.
   *
-  * Layout: parquet files under `base/v=N/__bucket=B/` plus a tiny `_manifest`
-  * parquet of `(v, bucket, empty)` rows — which buckets each version
-  * rewrote, with `empty = true` as the TOMBSTONE for a bucket whose
-  * every row was deleted (nothing is written for it, but readers at ≥ N
-  * must stop falling back to the older copy). A snapshot at version V
-  * resolves each bucket to its latest rewrite ≤ V; the resolution map
-  * is bounded by nBuckets × versions and computed driver-side from the
-  * manifest — never from data.
+  * Layout: parquet files under `base/v=N/__bucket=B/` plus the
+  * [[graft.util.ManifestIO]] manifest — one entry per bucket each
+  * version rewrote, `empty` as the TOMBSTONE for a bucket whose every
+  * row was deleted (nothing is written for it, but readers at ≥ N must
+  * stop falling back to the older copy). A version is committed by ONE
+  * manifest append after its bucket dirs landed, so a torn apply is
+  * invisible and its retry overwrites the same slot. A snapshot at
+  * version V resolves each bucket to its latest rewrite ≤ V; the
+  * resolution map is bounded by nBuckets × versions and computed
+  * driver-side from the manifest — never from data.
   *
   * Same LWW election (seq desc, delete wins ties) as the in-place
   * store, so `readVersion(latest)` ≡ [[DocStoreOps]] state after the
   * same applies (spec-pinned), and apply stays idempotent in VALUE —
   * re-applying a batch creates a new version with identical content.
   * Old versions are dropped by `vacuum(keepFrom)` once no reader needs
-  * them: buckets still referenced by surviving snapshots are kept.
+  * them: buckets still referenced by surviving snapshots are kept, and
+  * a read pinned below the floor fails loudly.
+  *
+  * Durability contract of record: `graft.ops.StoreContractSpec` —
+  * the cross-family property suite every persisted store passes
+  * (replay no-op, torn-write invisibility, RTBF permanence through
+  * rebuild + replay, rebuild answer-preservation, loud
+  * reader-vs-maintenance boundaries).
   */
 object VersionedStoreOps {
 
   import DocStoreOps.{BUCKET, OP, electWinners, withBucket}
+  import graft.util.ManifestIO
+  import ManifestIO.Entry
 
-  private def manifestPath(base: String) = s"$base/_manifest"
-
-  private def readManifest(spark: SparkSession, base: String): Array[(Long, Int, Boolean)] =
-    spark.read.parquet(manifestPath(base))
-      .select("v", "bucket", "empty")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
-
-  /** None on a fresh base (no manifest), the rows otherwise. Every public
-    * entry point reads the manifest exactly ONCE through this and threads
-    * the array to the private helpers — r9's shape re-read it per helper
-    * (twice per apply, once per readVersion), and each read is a full
-    * Spark job; on the bench's store tier that was most of the fixed
-    * cost. The array is bounded by nBuckets × versions. */
-  private def readManifestOpt(spark: SparkSession, base: String): Option[Array[(Long, Int, Boolean)]] = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath(base))
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mp)) None else Some(readManifest(spark, base))
-  }
-
-  private def latest(manifest: Array[(Long, Int, Boolean)]): Long =
-    manifest.map(_._1).max
-
-  private def appendManifest(spark: SparkSession, base: String,
-                             rows: Seq[(Long, Int, Boolean)]): Unit = {
-    import spark.implicits._
-    rows.toDF("v", "bucket", "empty")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(manifestPath(base))
-  }
+  /** `base/v=N/__bucket=B/`, committed through [[ManifestIO]]. */
+  private def layout(base: String) = ManifestIO.Layout(base, "v", BUCKET)
 
   /** Latest committed version, -1 on a fresh base. ONLY a missing
     * manifest means fresh — a transient read failure (object-store 503,
     * permission hiccup) must propagate, or applyChangesVersioned would
     * treat a live store as empty and destructively re-initialize v=0. */
   def currentVersion(spark: SparkSession, base: String): Long =
-    readManifestOpt(spark, base).map(latest).getOrElse(-1L)
-
-  /** Bucket ids a snapshot write actually produced, read from the
-    * written `__bucket=B` partition directories — one filesystem
-    * listing instead of a `select(BUCKET).distinct().collect()` Spark
-    * job over the written frame (and instead of the localCheckpoint
-    * that job forced, since it was the frame's second consumer). The
-    * committer has already renamed every task file in by the time this
-    * runs, so the listing is exact. */
-  private def writtenBuckets(spark: SparkSession, dir: String): Array[Int] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Array.empty
-    else fs.listStatus(p).collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith(s"$BUCKET=") =>
-        st.getPath.getName.stripPrefix(s"$BUCKET=").toInt
-    }
-  }
+    ManifestIO.entriesOpt(spark, layout(base)).fold(-1L)(ManifestIO.maxCommit)
 
   /** Version 0: the initial rows (one per key, producing sequence in
     * `seqCol`), bucket-partitioned under `base/v=0`. Rejects a base that
@@ -94,34 +62,27 @@ object VersionedStoreOps {
     * re-initialization must be an explicit delete-then-write. */
   def writeVersioned(df: DataFrame, spark: SparkSession, base: String,
                      key: String, seqCol: String, nBuckets: Int = 64): Unit = {
-    require(currentVersion(spark, base) < 0,
+    val l = layout(base)
+    require(!ManifestIO.exists(spark, l.manifest),
       s"versioned store already exists at $base (manifest present) — " +
         "delete it first to re-initialize, or applyChangesVersioned to evolve it")
     withBucket(df.withColumn(OP, lit("U")), key, nBuckets)
-      .write.mode(SaveMode.Overwrite).partitionBy(BUCKET).parquet(s"$base/v=0")
-    val written = writtenBuckets(spark, s"$base/v=0")
-    appendManifest(spark, base, written.toSeq.map(bk => (0L, bk, false)))
+      .write.mode(SaveMode.Overwrite).partitionBy(BUCKET).parquet(l.commitDir("", 0))
+    ManifestIO.commit(spark, l,
+      ManifestIO.writtenParts(spark, l, "", 0).map(Entry("", 0, _)), append = false)
   }
 
-  /** Bucket → dir resolution for a snapshot: latest rewrite ≤ v per
-    * bucket, tombstones excluded. Pure — works on an already-read
-    * manifest array. */
-  private def liveDirs(manifest: Array[(Long, Int, Boolean)], base: String,
-                       v: Long): Seq[String] =
-    manifest
-      .filter(_._1 <= v)
-      .groupBy(_._2).toSeq
-      .map { case (bk, hist) => (bk, hist.maxBy(_._1)) }
-      .collect { case (bk, (ver, _, empty)) if !empty => s"$base/v=$ver/$BUCKET=$bk" }
-
-  /** `readVersion` against an already-read manifest — no extra I/O. */
-  private def readVersionFrom(spark: SparkSession,
-                              manifest: Array[(Long, Int, Boolean)],
+  /** `readVersion` against an already-read manifest — no extra manifest
+    * I/O. A pinned version is checked against the vacuum: a bucket dir it
+    * resolves to that was reclaimed fails the read loudly. */
+  private def readVersionFrom(spark: SparkSession, manifest: Seq[Entry],
                               base: String, v: Option[Long]): DataFrame = {
-    val ver = v.getOrElse(latest(manifest))
-    val dirs = liveDirs(manifest, base, ver)
+    val l = layout(base)
+    val ver = v.getOrElse(ManifestIO.maxCommit(manifest))
+    val dirs = ManifestIO.resolve(manifest, ver)
     require(dirs.nonEmpty, s"version $ver has no data under $base")
-    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    v.foreach(ManifestIO.requireRetained(spark, l, _, dirs))
+    spark.read.option("mergeSchema", "true").parquet(dirs.map(l.dir): _*)
       .filter(col(OP) =!= "D").drop(OP)
   }
 
@@ -129,10 +90,11 @@ object VersionedStoreOps {
     * resolved bucket dirs — each bucket's single winning copy —
     * filtering the delete tombstones those copies retain (see
     * [[DocStoreOps]]: a tombstone carries the delete's sequence so
-    * later stale updates cannot resurrect the row). One manifest read. */
+    * later stale updates cannot resurrect the row). One manifest read.
+    * A `v` below the [[vacuum]] floor fails loudly. */
   def readVersion(spark: SparkSession, base: String,
                   v: Option[Long] = None): DataFrame =
-    readVersionFrom(spark, readManifest(spark, base), base, v)
+    readVersionFrom(spark, ManifestIO.entries(spark, layout(base)), base, v)
 
   /** Apply a changes batch as a NEW version. Identical semantics to
     * [[DocStoreOps.applyChanges]]; the difference is purely physical —
@@ -141,9 +103,9 @@ object VersionedStoreOps {
   def applyChangesVersioned(changes: DataFrame, spark: SparkSession,
                             base: String, key: String, seqCol: String,
                             opCol: String, nBuckets: Int = 64): Long = {
-    val manifest = readManifest(spark, base) // the op's ONLY manifest read
-    val cur = latest(manifest)
-    val next = cur + 1
+    val l = layout(base)
+    val manifest = ManifestIO.entries(spark, l) // the op's ONLY manifest read
+    val next = ManifestIO.nextCommit(manifest)
     val batch = withBucket(changes.withColumnRenamed(opCol, OP), key, nBuckets)
     // touched buckets off the RAW batch (one map-side-partial aggregate):
     // the election keeps a winner per key, so winners' bucket set ≡ the
@@ -151,11 +113,8 @@ object VersionedStoreOps {
     // batch just to probe it (see [[DocStoreOps.applyChanges]])
     val touched = batch.select(BUCKET).distinct()
       .collect().map(_.getInt(0)) // bounded by nBuckets
-    val touchedDirs = manifest
-      .filter { case (ver, bk, _) => ver <= cur && touched.contains(bk) }
-      .groupBy(_._2).toSeq
-      .map { case (bk, hist) => (bk, hist.maxBy(_._1)) }
-      .collect { case (bk, (ver, _, empty)) if !empty => s"$base/v=$ver/$BUCKET=$bk" }
+    val touchedDirs = ManifestIO.resolve(manifest)
+      .filter(e => touched.contains(e.part.toInt)).map(l.dir)
     // snapshot rows carry their OP (tombstones included) — the
     // election sees deletes' sequences, same contract as the
     // in-place store
@@ -176,10 +135,10 @@ object VersionedStoreOps {
       affected.unionByName(batch, allowMissingColumns = true), key, seqCol)
       .filter(col(BUCKET).isin(touched.toIndexedSeq: _*))
       .write.mode(SaveMode.Overwrite)
-      .partitionBy(BUCKET).parquet(s"$base/v=$next")
-    val surviving = writtenBuckets(spark, s"$base/v=$next").toSet
-    appendManifest(spark, base,
-      touched.toSeq.map(bk => (next, bk, !surviving.contains(bk))))
+      .partitionBy(BUCKET).parquet(l.commitDir("", next))
+    val surviving = ManifestIO.writtenParts(spark, l, "", next).toSet
+    ManifestIO.commit(spark, l, touched.toSeq.map(bk =>
+      Entry("", next, bk, empty = !surviving(bk.toLong))), append = true)
     next
   }
 
@@ -189,7 +148,7 @@ object VersionedStoreOps {
     * which the LWW election guarantees. */
   def diffVersions(spark: SparkSession, base: String, key: String,
                    seqCol: String, vFrom: Long, vTo: Long): DataFrame = {
-    val manifest = readManifest(spark, base) // shared by both snapshots
+    val manifest = ManifestIO.entries(spark, layout(base)) // shared by both snapshots
     val a = readVersionFrom(spark, manifest, base, Some(vFrom))
       .select(col(key), col(seqCol).as("__seq_from"))
     val b = readVersionFrom(spark, manifest, base, Some(vTo))
@@ -211,7 +170,7 @@ object VersionedStoreOps {
     * reads plus one key-partitioned full outer join. */
   def changeFeed(spark: SparkSession, base: String, key: String,
                  seqCol: String, vFrom: Long, vTo: Long): DataFrame = {
-    val manifest = readManifest(spark, base) // shared by both snapshots
+    val manifest = ManifestIO.entries(spark, layout(base)) // shared by both snapshots
     def packed(v: Long, as: String) = {
       val df = readVersionFrom(spark, manifest, base, Some(v))
       val payload = df.columns.filterNot(_ == key)
@@ -230,30 +189,17 @@ object VersionedStoreOps {
 
   /** Drop snapshots older than `keepFrom`: a bucket dir survives iff
     * some snapshot ≥ keepFrom still resolves to it — e.g. a v=0 bucket
-    * never rewritten since stays on disk (under its original path, the
-    * manifest row preserved so resolution keeps finding it) while v=0's
-    * superseded buckets are deleted. Readers pinned below `keepFrom`
-    * lose their snapshot — that is the caller's retention contract. */
+    * never rewritten since stays on disk while v=0's superseded buckets
+    * are deleted, together with any torn apply's orphans. The manifest
+    * is left intact, so a reader pinned below `keepFrom` still resolves
+    * its full snapshot and fails loudly on the first reclaimed bucket —
+    * it never reads a partial one. */
   def vacuum(spark: SparkSession, base: String, keepFrom: Long): Unit = {
-    val manifest = readManifest(spark, base)
-    require(keepFrom <= manifest.map(_._1).max,
+    val l = layout(base)
+    val manifest = ManifestIO.entries(spark, l)
+    require(keepFrom <= ManifestIO.maxCommit(manifest),
       s"keepFrom=$keepFrom is past the latest version")
-    // per bucket, the entry a snapshot at keepFrom resolves to; rows at
-    // or above keepFrom always survive (some later snapshot uses them)
-    val resolved = manifest.filter(_._1 <= keepFrom)
-      .groupBy(_._2).map { case (_, hist) => hist.maxBy(_._1) }.toSet
-    val (kept, pruned) = manifest.partition { r =>
-      r._1 > keepFrom || resolved(r)
-    }
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    pruned.foreach { case (ver, bk, empty) =>
-      if (!empty)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$base/v=$ver/$BUCKET=$bk"), true)
-    }
-    import spark.implicits._
-    kept.toSeq.toDF("v", "bucket", "empty")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(manifestPath(base))
+    ManifestIO.sweep(spark, l, Seq(""), manifest,
+      ManifestIO.retainedFrom(manifest, keepFrom))
   }
 }

@@ -217,7 +217,7 @@ case class AggStoreRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // registration, or whose every bucket is tombstoned, can't serve:
     // fall back to the fact scan rather than throw inside the optimizer
     if (!graft.util.ManifestIO.exists(spark,
-        s"${reg.storePath}/_manifest")) return None
+        graft.util.ManifestIO.manifestDir(reg.storePath))) return None
     val liveDirs =
       graft.ops.IncrementalAggOps.liveStorePaths(spark, reg.storePath)
     if (liveDirs.isEmpty) return None

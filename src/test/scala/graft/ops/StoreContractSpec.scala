@@ -13,8 +13,9 @@ import graft.SparkTestBase
   * with its own mechanism (manifest commit dirs for the vector and
   * join-view stores, a data-row guard + tombstone carry-forward for
   * the fingerprint store, a commit ledger for the text indexes, COW
-  * versions + manifest tags for the aggregate store); this suite pins
-  * the SEMANTICS those mechanisms share:
+  * versions + manifest tags for the aggregate store, COW versions + an
+  * LWW election for the versioned doc store); this suite pins the
+  * SEMANTICS those mechanisms share:
   *
   *  1. REPLAY: redelivering a committed batch changes nothing.
   *  2. TORN WRITE: data rows landed by an attempt whose commit never
@@ -321,6 +322,57 @@ class StoreContractSpec extends SparkTestBase {
         .collect().map(_.toSeq).toSeq
         .sortBy(_.head.asInstanceOf[Long])
       def leaks(ans: Seq[Seq[Any]]): Boolean = false
+    })
+  }
+
+  test("versioned store honors the store contract (replay = the same " +
+    "changes batch re-applied; forget = delete ops)") {
+    val base = Files.createTempDirectory("sc-ver").toString
+    val kv = docs.select(col("doc_id").as("k"),
+      length(col("text")).as("v"), lit(1L).as("seq"))
+    val seedRows = kv.filter(pmod(col("k"), lit(5)) =!= 0)
+    val batch = kv.filter(pmod(col("k"), lit(5)) === 0)
+      .withColumn("op", lit("U"))
+    // the deletes' later sequence wins every election against a replay
+    // of the batch that carried the doomed ids
+    val deletes = doomedOf(docs, "doc_id").select(col("doc_id").as("k"),
+      lit(0).as("v"), lit(2L).as("seq"), lit("D").as("op"))
+    val doomed = doomedIds(docs, "doc_id")
+    def applyChanges(changes: DataFrame): Unit = VersionedStoreOps
+      .applyChangesVersioned(changes, spark, base, "k", "seq", "op", 8): Unit
+    def snapshot(v: Option[Long]): Seq[Seq[Any]] = VersionedStoreOps
+      .readVersion(spark, base, v).select("k", "v", "seq")
+      .collect().map(_.toSeq).toSeq
+      .sortBy(_.head.asInstanceOf[Long])
+    runContract(new StoreAdapter {
+      val family = "versioned"
+      def seed(): Unit =
+        VersionedStoreOps.writeVersioned(seedRows, spark, base, "k", "seq", 8)
+      def redeliver(): Unit = applyChanges(batch)
+      def tear(): Unit = {
+        // an apply's bucket dirs at the next version slot, never
+        // published by a manifest entry
+        val next = VersionedStoreOps.currentVersion(spark, base) + 1
+        spark.read.parquet(s"$base/v=0")
+          .withColumn("v", col("v") + 1000)
+          .write.mode("overwrite").partitionBy("__bucket")
+          .parquet(s"$base/v=$next")
+      }
+      val forget = Some(() => applyChanges(deletes))
+      def rebuild(): Unit = VersionedStoreOps.vacuum(spark, base,
+        keepFrom = VersionedStoreOps.currentVersion(spark, base))
+      def answer(): Seq[Seq[Any]] = snapshot(None)
+      def leaks(ans: Seq[Seq[Any]]): Boolean =
+        ans.exists(r => doomed(r.head.asInstanceOf[Long]))
+      override def timeTravel: Option[TimeTravel] = Some(new TimeTravel {
+        def capture(): Long = VersionedStoreOps.currentVersion(spark, base)
+        def mutate(): Unit = applyChanges(kv.filter(pmod(col("k"), lit(9)) === 1)
+          .select(col("k"), (col("v") + 1).as("v"), lit(3L).as("seq"),
+            lit("U").as("op")))
+        def readAt(h: Long): Seq[Seq[Any]] = snapshot(Some(h))
+        def collapse(): Unit = VersionedStoreOps.vacuum(spark, base,
+          keepFrom = VersionedStoreOps.currentVersion(spark, base))
+      })
     })
   }
 

@@ -141,5 +141,11 @@ class VersionedStoreSpec extends SparkTestBase {
     assert(keptV0 == 7, s"other v0 buckets must survive, got $keptV0")
     assert(rows(VersionedStoreOps.readVersion(spark, base, Some(1L))) == want1)
     assert(rows(VersionedStoreOps.readVersion(spark, base, Some(2L))) == want2)
+    // below the floor, v0 would resolve key 7's bucket to the reclaimed
+    // dir: the read must fail loudly, never return the other 7 buckets
+    val e = intercept[IllegalArgumentException] {
+      VersionedStoreOps.readVersion(spark, base, Some(0L))
+    }
+    assert(e.getMessage.contains("retention floor"), e.getMessage)
   }
 }

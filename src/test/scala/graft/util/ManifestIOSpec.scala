@@ -4,8 +4,8 @@ import java.nio.file.Files
 
 import graft.SparkTestBase
 
-/** [[ManifestIO]] — the versioned commit seam under both
-  * manifest-committed stores. The property that matters: at EVERY
+/** [[ManifestIO]] — the versioned commit seam under every
+  * manifest-committed store. The property that matters: at EVERY
   * point of a swap (including a crash that tears the new version's
   * write), a committed manifest remains resolvable — the flat
   * overwrite this replaced had a window with none. */
