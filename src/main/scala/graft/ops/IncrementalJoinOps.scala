@@ -257,9 +257,12 @@ object IncrementalJoinOps {
     * deferred compaction GC (`gc = false`) and torn-apply orphans
     * alike ([[ManifestIO.sweep]], which skips commit dirs numbered past
     * the manifest's max — the slot a concurrent refresh or compaction
-    * is writing into before its publish). */
+    * is writing into before its publish). The view has no as-of read,
+    * so the manifest versions a deferred compaction kept are retired
+    * first. */
   def vacuumJoinView(spark: SparkSession, base: String): Unit = {
     val l = layout(base)
+    ManifestIO.vacuumVersions(spark, l.manifest, retainVersions = 0)
     val manifest = ManifestIO.entries(spark, l)
     ManifestIO.sweep(spark, l, Sides, manifest, manifest)
   }
